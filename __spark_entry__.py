@@ -91,23 +91,19 @@ ATTRS = ("commit", "lang", "content")
 CFG = SinkConfig(insert_mode=InsertMode.PUT, delete_mode=DeleteMode.ROW)
 
 
-#: memoized per-path input size — file METADATA (os.stat), recomputed per
-#: process; never caches any computed result
-_SCAN_BYTES: dict[str, int] = {}
-
-
 def _scan_bytes(path: str) -> int:
-    if path not in _SCAN_BYTES:
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if not f.startswith(("_", ".")):
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        pass
-        _SCAN_BYTES[path] = total
-    return _SCAN_BYTES[path]
+    """Input size of a parquet path from file metadata (os.stat), read on
+    every call so a rewritten dataset is never sized from stale numbers —
+    the walk is cheap next to the Spark job it sizes."""
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if not f.startswith(("_", ".")):
+                try:
+                    total += os.path.getsize(os.path.join(root, f))
+                except OSError:
+                    pass
+    return total
 
 
 def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:

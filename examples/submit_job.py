@@ -27,7 +27,7 @@ def main() -> None:
     p.add_argument("--delete-mode", default="row")
     p.add_argument("--insert-mode", default="put")
     p.add_argument("--fast-lineage", action="store_true",
-                   help="observe()-based lineage: one Spark job per batch")
+                   help="observe()-based lineage: no extra stats pass per batch")
     args = p.parse_args()
 
     spark = (

@@ -112,27 +112,15 @@ class SinkConfig:
     salt_buckets: int = 8          # hot-key salting fan-out for two-phase LWW
     auto_create: bool = True       # CREATE TABLE IF NOT EXISTS semantics (S17)
     # Lineage granularity.  False (default): global lineage is observed as
-    # a side-effect of the merge job itself (df.observe — ONE Spark job per
-    # batch, zero extra scans — the 10^10-event setting) and all buckets are
-    # treated as touched (uniform batches touch them all anyway).  True:
-    # per-source-partition offset ranges + the touched-bucket set, at the
-    # cost of one extra aggregation pass over the batch — turn on for
-    # sparse/selective batches or when per-partition audit lineage matters.
+    # a side-effect of the merge write (df.observe — no extra scan of the
+    # batch; a clean batch runs 3 Spark jobs, the fold and bucket shuffles
+    # plus the write, and a dirty one adds the DLQ write) and all buckets
+    # are treated as touched (uniform batches touch them all anyway).
+    # True: per-source-partition offset ranges + the touched-bucket set, at
+    # the cost of one extra aggregation pass over the batch — turn on for
+    # sparse/selective batches (only touched buckets are read and
+    # rewritten) or when per-partition audit lineage matters.
     lineage_per_partition: bool = False
-    # Merge-fold shuffle layout.  True: the fold's one exchange IS the sink
-    # layout — events repartition by the lake bucket and the fold groups by
-    # (_bucket, pk), so the copy-on-write writer needs no second exchange
-    # (2 shuffles → 1 per batch).  False (default): classic two-exchange
-    # plan — fold keyed on the bare pk (maximally uniform reduce
-    # partitioning), then a repartition onto the bucket layout.  MEASURED
-    # (OPTIMIZATION_r06.md): at the 8M-event bench with n_buckets=32 on 32
-    # cores the single-exchange variant is ~30% SLOWER — hashing ~n_buckets
-    # distinct bucket values into n_buckets reduce partitions leaves ~1/e
-    # of them empty and up to 3 buckets on one reducer, and the exchange it
-    # saves only moves the already-folded output (~1/8 of the rows).  True
-    # pays off only when n_buckets >> cores so bucket-hash collisions even
-    # out; keep False unless that holds.
-    fold_by_bucket: bool = False
     # Pluggable event parser — the engine's one user extension point,
     # mirroring the reference's ``event.parse.class``
     # (``TableStoreSinkConfig.java:53-54``, instantiation ``:702-710``,

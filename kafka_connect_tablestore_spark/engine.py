@@ -7,7 +7,7 @@ errants → commit offsets.  Here the same stages are one declarative plan per
 micro-batch:
 
     events → validate/classify (Catalyst exprs) → split errant/clean
-           → DLQ append                         → fold/MERGE into LakeTable
+           → fold/MERGE into LakeTable → tolerance gate + DLQ append
            → snapshot commit with embedded batch manifest (exactly-once)
 
 ``apply_batch`` is the ``foreachBatch`` body; ``replay`` drives a batch
@@ -18,21 +18,50 @@ crash-resume surface (a re-run skips committed batch_ids).
 from __future__ import annotations
 
 import math
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.observation import Observation
 
 from kafka_connect_tablestore_spark.config import RuntimeErrorTolerance, SinkConfig
 from kafka_connect_tablestore_spark.functions.hashing import bucket_of, cast_pk_columns
-from kafka_connect_tablestore_spark.lake.table import LakeTable
+from kafka_connect_tablestore_spark.lake.table import (
+    LINEAGE_KEYS,
+    LakeTable,
+    lineage_aggs,
+)
 from kafka_connect_tablestore_spark.operators.rowchange import (
     ERROR_COL,
     ToleranceError,
     dlq_rows,
-    enforce_tolerance,
     split_errant,
     validate_and_classify,
 )
+
+
+def _observed_lineage(obs: Observation, classified: DataFrame, is_clean) -> dict:
+    """The batch's observed lineage row, read after the data-write job.
+
+    The observation normally fires within milliseconds of that job
+    (listener-bus delivery is async).  Guard with a bounded poll: if the
+    metrics never arrive (e.g. the executed plan landed on a different
+    SparkSession than the one the Observation listener is registered on),
+    fall back to one direct aggregate job instead of blocking forever.
+    """
+    deadline = time.time() + 10.0
+    while time.time() < deadline:
+        # ``obs._jo.getRowOrEmpty()`` is a PySpark-private JVM probe
+        # (verified on the pinned Spark 4.1.2); guard it so a Spark
+        # upgrade that removes it degrades to the direct-aggregate
+        # fallback instead of crashing inside before_commit.
+        try:
+            if obs._jo is not None and obs._jo.getRowOrEmpty().isDefined():
+                return dict(obs.get)
+        except Exception:
+            break
+        time.sleep(0.05)
+    return classified.agg(*lineage_aggs(is_clean)).first().asDict()
 
 
 class CdcEngine:
@@ -53,9 +82,22 @@ class CdcEngine:
     def apply_batch(self, events: DataFrame, batch_id: str) -> dict:
         """Apply one micro-batch; returns the committed manifest entry.
 
-        Scan budget per batch (matters at 10^10 events): ① one combined
-        stats pass (per-partition lineage + touched buckets + errant count),
-        ② the merge/fold/write pass, ③ a DLQ write only when errants exist.
+        Scan budget per batch (matters at 10^10 events): the merge/fold/
+        write pass and a DLQ write only when errants exist.  With
+        ``lineage_per_partition`` one combined stats pass (per-partition
+        lineage + touched buckets + errant count) runs first; without it
+        the lineage aggregates ride the merge write via ``Dataset.observe``
+        on the pre-split frame, and every bucket is treated as touched (the
+        uniform-batch case).  The merge write is 3 Spark jobs under AQE.
+
+        Ordering contract (reference: errants are reported and the task
+        failed *before* Connect commits offsets, ``TableStoreSinkTask.java:
+        118-121``): the tolerance gate and the DLQ append run *between* the
+        data-write job and the snapshot pointer swap, via ``merge_batch``'s
+        ``before_commit`` hook.  A tolerance=NONE violation therefore aborts
+        the commit (orphan files only, no visible state change), and DLQ
+        rows can never be lost to a crash after commit — if the swap never
+        happens, the whole batch replays.
         """
         if self.config.event_parser is not None:
             # user extension point (reference: event.parse.class,
@@ -66,132 +108,53 @@ class CdcEngine:
         # which must agree with the post-union hash inside merge_batch
         events = cast_pk_columns(events, self.config.pk_fields, self.config.pk_types)
         classified = validate_and_classify(events, self.config, self.attr_fields)
-
-        if not self.config.lineage_per_partition:
-            return self._apply_batch_observed(classified, batch_id)
-
-        clean, errant = split_errant(classified)
-
         is_clean = F.col(ERROR_COL).isNull()
-        stats = (
-            classified.groupBy("partition")
-            .agg(
-                F.min(F.when(is_clean, F.col("offset"))).alias("start_offset"),
-                F.max(F.when(is_clean, F.col("offset"))).alias("end_offset"),
-                F.count(F.when(is_clean, F.lit(1))).alias("rows"),
-                F.count(F.when(~is_clean, F.lit(1))).alias("errant_rows"),
-                F.collect_set(
-                    F.when(
-                        is_clean,
-                        bucket_of(self.config.pk_fields, self.config.n_buckets),
-                    )
-                ).alias("buckets"),
+
+        if self.config.lineage_per_partition:
+            stats = (
+                classified.groupBy("partition")
+                .agg(
+                    *lineage_aggs(is_clean),
+                    F.collect_set(
+                        F.when(
+                            is_clean,
+                            bucket_of(self.config.pk_fields, self.config.n_buckets),
+                        )
+                    ).alias("buckets"),
+                )
+                .collect()
             )
-            .collect()
-        )
-        lineage = {
-            str(r["partition"]): {
-                "start_offset": r["start_offset"],
-                "end_offset": r["end_offset"],
-                "rows": r["rows"],
-                "errant_rows": r["errant_rows"],
+            per_partition = {
+                str(r["partition"]): {k: r[k] for k in LINEAGE_KEYS} for r in stats
             }
-            for r in stats
-        }
-        touched = sorted({b for r in stats for b in r["buckets"] if b is not None})
-        n_errant = sum(r["errant_rows"] for r in stats)
-        if n_errant and self.config.tolerance is RuntimeErrorTolerance.NONE:
-            # tolerance gate AFTER the stats pass, which already counted the
-            # errants — a standalone enforce_tolerance probe would re-scan
-            # the whole batch just to find zero errants on every clean
-            # batch, doubling the pre-merge scan budget the docstring
-            # promises.  The first-errant fetch (for the error message)
-            # only runs on the failing path.  Same abort semantics: raises
-            # before any DLQ write or merge.
-            enforce_tolerance(errant, self.config)
-        if n_errant and self.config.tolerance is RuntimeErrorTolerance.ALL:
-            self.table.append_dlq(dlq_rows(errant, self.config), batch_id)
-        return self.table.merge_batch(clean, batch_id, lineage=lineage, touched=touched)
+            touched = sorted({b for r in stats for b in r["buckets"] if b is not None})
+            clean, errant = split_errant(classified)
 
-    def _apply_batch_observed(self, classified, batch_id: str) -> dict:
-        """High-throughput path: EXACTLY one Spark job per clean batch.
+            def lineage() -> dict:
+                return per_partition
 
-        The lineage aggregates (offset range, clean/errant counts) ride the
-        merge job itself via ``Dataset.observe`` on the pre-split frame — no
-        extra scan.  Every bucket is treated as touched (the uniform-batch
-        case this path is built for).  A DLQ pass runs only when the
-        observation reports errants, so clean batches pay zero extra jobs.
+        else:
+            obs = Observation(f"lineage-{batch_id}")
+            clean, errant = split_errant(classified.observe(obs, *lineage_aggs(is_clean)))
+            touched = list(range(self.config.n_buckets))
 
-        Ordering contract (reference: errants are reported and the task
-        failed *before* Connect commits offsets, ``TableStoreSinkTask.java:
-        118-121``): the tolerance gate and the DLQ append run *between* the
-        data-write job (when the observation has fired) and the snapshot
-        pointer swap, via ``merge_batch``'s ``before_commit`` hook.  A
-        tolerance=NONE violation therefore aborts the commit (orphan files
-        only, no visible state change), and DLQ rows can never be lost to a
-        crash after commit — if the swap never happens, the whole batch
-        replays.
-        """
-        from pyspark.sql.observation import Observation
-
-        is_clean = F.col(ERROR_COL).isNull()
-        obs = Observation(f"lineage-{batch_id}")
-        observed = classified.observe(
-            obs,
-            F.min(F.when(is_clean, F.col("offset"))).alias("start_offset"),
-            F.max(F.when(is_clean, F.col("offset"))).alias("end_offset"),
-            F.count(F.when(is_clean, F.lit(1))).alias("rows"),
-            F.count(F.when(~is_clean, F.lit(1))).alias("errant_rows"),
-        )
-        clean, errant = split_errant(observed)
-
-        def _lineage_row() -> dict:
-            # The data-write job has run, so the observation normally fires
-            # within milliseconds (listener-bus delivery is async).  Guard
-            # with a bounded poll: if the metrics never arrive (e.g. the
-            # executed plan landed on a different SparkSession than the one
-            # the Observation listener is registered on), fall back to one
-            # direct aggregate job instead of blocking forever.
-            import time as _time
-
-            deadline = _time.time() + 10.0
-            while _time.time() < deadline:
-                # ``obs._jo.getRowOrEmpty()`` is a PySpark-private JVM probe
-                # (verified on the pinned Spark 4.1.2); guard it so a Spark
-                # upgrade that removes it degrades to the direct-aggregate
-                # fallback instead of crashing inside before_commit.
-                try:
-                    if obs._jo is not None and obs._jo.getRowOrEmpty().isDefined():
-                        return dict(obs.get)
-                except Exception:
-                    break
-                _time.sleep(0.05)
-            row = classified.agg(
-                F.min(F.when(is_clean, F.col("offset"))).alias("start_offset"),
-                F.max(F.when(is_clean, F.col("offset"))).alias("end_offset"),
-                F.count(F.when(is_clean, F.lit(1))).alias("rows"),
-                F.count(F.when(~is_clean, F.lit(1))).alias("errant_rows"),
-            ).first()
-            return row.asDict()
+            def lineage() -> dict:
+                return {"_global": _observed_lineage(obs, classified, is_clean)}
 
         def before_commit(manifest: dict) -> None:
-            # the data-write job has run ⇒ the observation has fired
-            lineage = {"_global": _lineage_row()}
-            n_errant = lineage["_global"]["errant_rows"]
+            # runs after the data write, so an observed lineage row is ready
+            partitions = lineage()
+            n_errant = sum(ln["errant_rows"] for ln in partitions.values())
             if n_errant:
                 if self.config.tolerance is RuntimeErrorTolerance.NONE:
                     raise ToleranceError(
                         f"{n_errant} errant record(s) with tolerance=none in {batch_id}"
                     )
                 self.table.append_dlq(dlq_rows(errant, self.config), batch_id)
-            manifest["partitions"] = lineage
+            manifest["partitions"] = partitions
 
         return self.table.merge_batch(
-            clean,
-            batch_id,
-            lineage={"_observed": True},
-            touched=list(range(self.config.n_buckets)),
-            before_commit=before_commit,
+            clean, batch_id, touched=touched, before_commit=before_commit
         )
 
     # ----------------------------------------------------------- bootstrap

@@ -37,7 +37,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_connect_tablestore_spark.config import SinkConfig
@@ -58,6 +58,21 @@ SHA_COL = "content_sha256"
 #: attribute-column count cap per table, mirroring the reference's column
 #: count limit check (``utils/ParamChecker.java:75-97``).
 MAX_ATTR_COLUMNS = 128
+
+#: the per-partition lineage keys of a batch manifest
+LINEAGE_KEYS = ("start_offset", "end_offset", "rows", "errant_rows")
+
+
+def lineage_aggs(is_clean: Column) -> list[Column]:
+    """The batch-lineage aggregates, named :data:`LINEAGE_KEYS`: offset
+    range and count of the events where ``is_clean`` holds, and the count
+    of the rest."""
+    return [
+        F.min(F.when(is_clean, F.col("offset"))).alias("start_offset"),
+        F.max(F.when(is_clean, F.col("offset"))).alias("end_offset"),
+        F.count(F.when(is_clean, F.lit(1))).alias("rows"),
+        F.count(F.when(~is_clean, F.lit(1))).alias("errant_rows"),
+    ]
 
 
 class TableValidationError(ValueError):
@@ -222,7 +237,7 @@ class LakeTable:
         behind "resumable from checkpoint with per-partition lineage and
         metrics".  Covers both manifest shapes: per-partition lineage rows
         and the observed-mode ``_global`` row (one aggregate row per batch
-        when lineage rides the merge job via ``Dataset.observe``).
+        when lineage rides the merge write via ``Dataset.observe``).
 
         Manifests are snapshot METADATA (one small dict per batch), so
         building this frame from the driver-side snapshot is not a
@@ -233,8 +248,6 @@ class LakeTable:
         for bid, m in self.committed_batches().items():
             parts = m.get("partitions") or {}
             for p, ln in parts.items():
-                if not isinstance(ln, dict) or "rows" not in ln:
-                    continue  # e.g. the pre-observation {"_observed": True}
                 rows.append(
                     (
                         bid,
@@ -517,22 +530,23 @@ class LakeTable:
         self,
         clean_events: DataFrame,
         batch_id: str,
-        lineage: dict | None = None,
         touched: list[int] | None = None,
         before_commit=None,
     ) -> dict:
         """MERGE one micro-batch of clean events. Idempotent by batch_id.
 
-        Returns the batch manifest entry (also persisted in the snapshot):
-        per-source-partition offset ranges + row counts (lineage/metrics).
-        ``lineage``/``touched`` can be precomputed by the caller in a single
-        combined stats pass (see ``CdcEngine.apply_batch``) — at 10^10 events
-        every extra scan of the batch matters.
+        Returns the batch manifest entry (also persisted in the snapshot).
+        Without ``touched``, one combined stats pass computes the touched
+        buckets and the per-source-partition lineage (offset range + row
+        count).  A caller that passes ``touched`` has computed its own
+        lineage (see ``CdcEngine.apply_batch``) — at 10^10 events every
+        extra scan of the batch matters — and sets it from
+        ``before_commit``.
 
         ``before_commit(manifest)`` runs after the data files are written but
         *before* the snapshot pointer swap: it may enrich the manifest (e.g.
-        observed lineage) or raise to abort the commit (tolerance gate) —
-        an abort leaves only orphan files, never visible state.
+        lineage) or raise to abort the commit (tolerance gate) — an abort
+        leaves only orphan files, never visible state.
         """
         self.create_if_absent()
         snap = self.snapshot()
@@ -562,27 +576,23 @@ class LakeTable:
         pk = list(self.config.pk_fields)
         attr_fields = tuple(new_schema.keys())
 
-        src = clean_events.withColumn(
-            "_bucket", bucket_of(self.config.pk_fields, self.config.n_buckets)
-        )
-        if lineage is None or touched is None:
+        bucket = bucket_of(self.config.pk_fields, self.config.n_buckets)
+        lineage = None
+        if touched is None:
             # one combined stats pass: per-partition offset ranges + row
             # counts + the touched-bucket set (config-bounded collect)
             stats = (
-                src.groupBy("partition")
+                clean_events.groupBy("partition")
                 .agg(
-                    F.min("offset").alias("start_offset"),
-                    F.max("offset").alias("end_offset"),
-                    F.count(F.lit(1)).alias("rows"),
-                    F.collect_set("_bucket").alias("buckets"),
+                    *lineage_aggs(F.lit(True)),
+                    F.collect_set(bucket).alias("buckets"),
                 )
                 .collect()
             )
+            # every event handed in here is clean: no errant_rows key
             lineage = {
                 str(r["partition"]): {
-                    "start_offset": r["start_offset"],
-                    "end_offset": r["end_offset"],
-                    "rows": r["rows"],
+                    k: r[k] for k in ("start_offset", "end_offset", "rows")
                 }
                 for r in stats
             }
@@ -600,7 +610,7 @@ class LakeTable:
         )
 
         ev = align_to_schema(
-            src, new_schema, pk + ["commit_ts", "offset", "op", "_bucket"]
+            clean_events, new_schema, pk + ["commit_ts", "offset", "op"]
         )
         sha = (
             content_sha256("content")
@@ -608,36 +618,14 @@ class LakeTable:
             else F.lit(None).cast("string")
         )
         npart = min(self.config.n_buckets, max(len(touched), 1))
-        if self.config.fold_by_bucket:
-            # single-exchange fold (guide §2.4): repartition the unioned
-            # events ONCE by the lake bucket and group by (_bucket, pk) —
-            # HashPartitioning(_bucket) satisfies the aggregation's
-            # ClusteredDistribution(_bucket, pk), and the fold's output is
-            # already laid out for partitionBy(_bucket), so the writer adds
-            # no second exchange.  _bucket = hash(pk) % n never splits a
-            # key, so the groups are identical to a bare groupBy(pk).
-            tgt = (
-                None
-                if target is None
-                else target.withColumn(
-                    "_bucket",
-                    bucket_of(self.config.pk_fields, self.config.n_buckets),
-                )
-            )
-            merged = merge_into_state(
-                tgt, ev, self.config, attr_fields, emit_meta=True,
-                group_extra=("_bucket",), pre_partition=npart,
-            )
-            out = merged.withColumn(SHA_COL, F.when(~F.col("_deleted"), sha))
-        else:
-            merged = merge_into_state(
-                target, ev.drop("_bucket"), self.config, attr_fields,
-                emit_meta=True,
-            )
-            out = merged.withColumn(SHA_COL, F.when(~F.col("_deleted"), sha))
-            out = out.withColumn(
-                "_bucket", bucket_of(self.config.pk_fields, self.config.n_buckets)
-            ).repartition(npart, "_bucket")
+        merged = merge_into_state(
+            target, ev, self.config, attr_fields, emit_meta=True
+        )
+        out = (
+            merged.withColumn(SHA_COL, F.when(~F.col("_deleted"), sha))
+            .withColumn("_bucket", bucket)
+            .repartition(npart, "_bucket")
+        )
 
         # --- copy-on-write: write only touched buckets ----------------------
         version = snap["version"] + 1
@@ -667,7 +655,7 @@ class LakeTable:
             "wall_secs": round(time.time() - t0, 3),
         }
         if before_commit is not None:
-            # tolerance gate / observed lineage: runs post-write, pre-swap —
+            # tolerance gate / lineage: runs post-write, pre-swap —
             # a raise here aborts the commit (orphan files only)
             before_commit(manifest)
         meta = {
@@ -870,21 +858,6 @@ class LakeTable:
         }
         self._commit(meta)
         return {"version": new_version, "rolled_back_to": version}
-
-    def amend_lineage(self, batch_id: str, lineage: dict) -> None:
-        """Attach post-hoc lineage metrics (from ``Dataset.observe``) to an
-        already-committed batch as a sidecar — the snapshot itself stays
-        immutable."""
-        d = os.path.join(self.dir, "lineage")
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f"{batch_id}.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(lineage, f)
-        os.rename(tmp, os.path.join(d, f"{batch_id}.json"))
-
-    def read_lineage(self, batch_id: str) -> dict | None:
-        p = os.path.join(self.dir, "lineage", f"{batch_id}.json")
-        return json.load(open(p)) if os.path.exists(p) else None
 
     # ----------------------------------------------------------------- dlq
     def append_dlq(self, dlq_df: DataFrame, batch_id: str) -> None:

@@ -29,7 +29,6 @@ from kafka_connect_tablestore_spark.config import (
     COL_DELETE_MODES_,
     ROW_DELETE_MODES_,
     InsertMode,
-    RuntimeErrorTolerance,
     SinkConfig,
 )
 
@@ -153,8 +152,8 @@ def split_errant(classified: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     ``clean`` has the normalized ``op`` column; ``errant`` keeps the original
     record plus ``error_info`` (DLQ layout applied downstream, S15/S16).
-    With tolerance=NONE the caller must assert ``errant.isEmpty()`` —
-    see :func:`enforce_tolerance`.
+    With tolerance=NONE the caller must refuse a batch whose ``errant``
+    is non-empty (``CdcEngine.apply_batch`` does so before its commit).
     """
     err = F.col(ERROR_COL)
     clean = (
@@ -165,15 +164,6 @@ def split_errant(classified: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
     errant = classified.where(err.isNotNull()).drop("_op")
     return clean, errant
-
-
-def enforce_tolerance(errant: DataFrame, config: SinkConfig) -> None:
-    if config.tolerance is RuntimeErrorTolerance.NONE:
-        first = errant.select(ERROR_COL).limit(1).collect()
-        if first:
-            raise ToleranceError(
-                f"errant record with tolerance=none: {first[0][ERROR_COL]}"
-            )
 
 
 def dlq_rows(errant: DataFrame, config: SinkConfig | None = None) -> DataFrame:

@@ -46,6 +46,19 @@ def _fold_dot(a, b) -> float:
     return s
 
 
+def _sql_double(x) -> str:
+    """One double as a SQL literal token: ``repr(float)`` + ``D`` for finite
+    values (shortest round-trip), an explicit ``double('NaN')`` /
+    ``double('Infinity')`` / ``double('-Infinity')`` cast otherwise — the
+    bare ``nan``/``inf`` tokens ``repr`` gives would parse as column names."""
+    x = float(x)
+    if math.isfinite(x):
+        return repr(x) + "D"
+    if math.isnan(x):
+        return "double('NaN')"
+    return "double('Infinity')" if x > 0 else "double('-Infinity')"
+
+
 def _lit_vec(xs) -> "F.Column":
     """``array<double>`` literal built by the SQL parser in ONE py4j call.
     ``F.lit(list)`` constructs the tree element-by-element over py4j —
@@ -54,10 +67,10 @@ def _lit_vec(xs) -> "F.Column":
     caught it).  The parser form is ~100x cheaper and yields the same
     Literal: ``repr(float)`` is shortest-roundtrip and both Python and the
     JVM parse decimal strings correctly rounded, so values are
-    bit-identical."""
+    bit-identical (non-finite values: see :func:`_sql_double`)."""
     if not xs:
         return F.lit([]).cast("array<double>")
-    return F.expr("array(" + ",".join(repr(float(x)) + "D" for x in xs) + ")")
+    return F.expr("array(" + ",".join(_sql_double(x) for x in xs) + ")")
 
 
 def _lit_mat(rows) -> "F.Column":
@@ -68,8 +81,7 @@ def _lit_mat(rows) -> "F.Column":
     return F.expr(
         "array("
         + ",".join(
-            "array(" + ",".join(repr(float(x)) + "D" for x in r) + ")"
-            for r in rows
+            "array(" + ",".join(_sql_double(x) for x in r) + ")" for r in rows
         )
         + ")"
     )

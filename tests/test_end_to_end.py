@@ -69,14 +69,53 @@ def test_multi_batch_replay_matches_single(spark, tmp_path):
 
 
 def test_malformed_events_go_to_dlq(spark, tmp_path):
-    config = SinkConfig(
-        delete_mode=DeleteMode.ROW, tolerance=RuntimeErrorTolerance.ALL
+    """Both lineage modes dead-letter the same rows, reach the same state,
+    agree on the batch's lineage totals, and refuse the batch under
+    tolerance=none."""
+    from kafka_connect_tablestore_spark.operators.rowchange import ToleranceError
+
+    events = synth_changelog(
+        spark, 4000, seed=7, n_repos=30, paths_per_repo=10, p_malformed=0.05
     )
-    engine, oracle_dlq = run_case(spark, tmp_path, config, p_malformed=0.05)
-    dlq = engine.table.read_dlq()
-    assert dlq is not None
-    assert dlq.count() == len(oracle_dlq)
-    assert set(dlq.columns) == {"topic_partition", "offset", "key", "value", "error_info"}
+    sigs, totals = {}, {}
+    for flag in (True, False):
+        config = SinkConfig(
+            delete_mode=DeleteMode.ROW,
+            tolerance=RuntimeErrorTolerance.ALL,
+            lineage_per_partition=flag,
+        )
+        engine, oracle_dlq = run_case(
+            spark, tmp_path / f"lp{flag}", config, p_malformed=0.05
+        )
+        dlq = engine.table.read_dlq()
+        assert dlq is not None
+        assert dlq.count() == len(oracle_dlq)
+        assert set(dlq.columns) == {"topic_partition", "offset", "key", "value", "error_info"}
+        sigs[flag] = {
+            (r["repo"], r["path"]): r["content_sha256"] for r in engine.state().collect()
+        }
+        parts = engine.table.committed_batches()["replay-0"]["partitions"]
+        totals[flag] = {
+            k: sum(p[k] for p in parts.values()) for k in ("rows", "errant_rows")
+        }
+        assert totals[flag]["errant_rows"] == len(oracle_dlq) > 0
+
+        strict = CdcEngine(
+            spark,
+            SinkConfig(
+                delete_mode=DeleteMode.ROW,
+                tolerance=RuntimeErrorTolerance.NONE,
+                lineage_per_partition=flag,
+            ),
+            str(tmp_path / f"strict{flag}"),
+            "repos",
+            ATTRS,
+        )
+        with pytest.raises(ToleranceError):
+            strict.apply_batch(events, "b-0")
+        assert "b-0" not in strict.table.committed_batches()
+    assert sigs[True] == sigs[False]
+    assert totals[True] == totals[False]
 
 
 def test_tolerance_none_raises(spark, tmp_path):

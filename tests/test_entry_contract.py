@@ -75,3 +75,15 @@ def test_rows_only_queries_run(spark, name):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_scan_bytes_sees_a_grown_directory(tmp_path):
+    """The scan-size probe re-reads file metadata on every call: a directory
+    that grows between two calls reports the larger size."""
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    (d / "part-0.parquet").write_bytes(b"x" * 100)
+    (d / "_SUCCESS").write_bytes(b"")
+    assert entrymod._scan_bytes(str(d)) == 100
+    (d / "part-1.parquet").write_bytes(b"y" * 250)
+    assert entrymod._scan_bytes(str(d)) == 350

@@ -801,3 +801,18 @@ def test_ivf_family_probe_plans_carry_no_pair_dedup_shuffle(spark, tmp_path):
 
     graph_plan = final_plan(knn_graph(df, k=3, n_cells=8, train="first"))
     assert "keys=[query_id" not in graph_plan  # distributed join, still dedup-free
+
+
+def test_array_literals_round_trip_non_finite_values(spark):
+    """The SQL-parsed array literals carry NaN and ±Inf as doubles, not as
+    ``nan``/``inf`` tokens the parser would resolve as column names."""
+    from kafka_connect_tablestore_spark.operators.similarity import _lit_mat, _lit_vec
+
+    xs = [1.0, math.nan, math.inf, -math.inf]
+    row = spark.range(1).select(
+        _lit_vec(xs).alias("v"), _lit_mat([xs, xs[::-1]]).alias("m")
+    ).first()
+    for got, want in [(row["v"], xs), *zip(row["m"], [xs, xs[::-1]])]:
+        assert len(got) == len(want)
+        for g, w in zip(got, want):
+            assert (math.isnan(g) and math.isnan(w)) or g == w, (got, want)
