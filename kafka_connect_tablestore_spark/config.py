@@ -109,7 +109,6 @@ class SinkConfig:
     table_name_format: str = "<topic>"
     # Physical knobs for the lake sink.
     n_buckets: int = 32
-    salt_buckets: int = 8          # hot-key salting fan-out for two-phase LWW
     auto_create: bool = True       # CREATE TABLE IF NOT EXISTS semantics (S17)
     # Lineage granularity.  False (default): global lineage is observed as
     # a side-effect of the merge write (df.observe — no extra scan of the
@@ -155,7 +154,7 @@ class SinkConfig:
                 "delete.mode requires a record-derived primary key "
                 "(reference: TableStoreSinkConfig.java:590-593)"
             )
-        if self.n_buckets < 1 or self.salt_buckets < 1:
+        if self.n_buckets < 1:
             raise ValueError("bucket counts must be >= 1")
 
     def table_for_topic(self, topic: str) -> str:

@@ -1304,17 +1304,16 @@ def build_bloom_index(
     bitwise OR is associative/idempotent, so replayed appends are
     harmless.  :func:`compact_bloom_index` rewrites to one row per word."""
     import json
-    import os
+
+    from .index_maint import write_text_atomic
 
     _bloom_validate(m_bits, k)
     build_bloom_bitset(prior, m_bits, k, text_col).write.mode(
         "overwrite"
     ).parquet(path)
-    meta_tmp = path.rstrip("/") + ".meta.tmp"
-    meta = path.rstrip("/") + ".meta"
-    with open(meta_tmp, "w") as f:
-        json.dump({"m_bits": m_bits, "k": k}, f)
-    os.replace(meta_tmp, meta)
+    write_text_atomic(
+        path.rstrip("/") + ".meta", json.dumps({"m_bits": m_bits, "k": k})
+    )
 
 
 def _bloom_meta(path: str) -> tuple[int, int]:

@@ -40,6 +40,11 @@ untouched; between the renames, :func:`recover_compaction` restores the
 Sidecars (``.meta``, ``.batches`` manifests, centroid/codebook JSONs) live
 NEXT TO the index directory, not inside it, so the swap never touches them.
 
+The sidecar protocol itself lives here too: every sidecar is written by
+:func:`write_text_atomic` (tmp, fsync, rename), and the per-batch commit
+markers of the streaming drivers (``<index>.batches/<batch_id>.json``) are
+read and written only through :func:`batch_committed` / :func:`commit_batch`.
+
 This is an OFFLINE maintenance operation: run it when no probe or append
 is in flight (the daily-ingest shape has a natural window between batches).
 The streaming drivers in streaming/pipeline.py never call it implicitly.
@@ -47,6 +52,7 @@ The streaming drivers in streaming/pipeline.py never call it implicitly.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -63,6 +69,42 @@ INDEX_PARTITION_COLS = {
     "ivfpq": "cell",
     "semantic": "cell",
 }
+
+
+def write_text_atomic(path: str, text: str) -> None:
+    """Write a sidecar atomically and durably: tmp, then fsync, then
+    ``os.replace``.  A reader sees the old content or the new, never a
+    torn file; and the fsync keeps a sidecar from surviving a power loss
+    LESS durably than the data written after it (a lost centroid or params
+    file would let a later batch silently retrain or overwrite the index;
+    a lost batch marker would replay a batch the index already holds)."""
+    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def _batch_marker(index_path: str, batch_id: int) -> str:
+    return os.path.join(index_path.rstrip("/") + ".batches", f"{batch_id}.json")
+
+
+def batch_committed(index_path: str, batch_id: int) -> bool:
+    """True once :func:`commit_batch` has recorded ``batch_id`` for the
+    index (or view) at ``index_path``."""
+    return os.path.exists(_batch_marker(index_path, batch_id))
+
+
+def commit_batch(index_path: str, batch_id: int, **fields) -> None:
+    """Record ``batch_id`` as done: ``<index>.batches/<batch_id>.json``
+    holding ``batch_id`` plus the stream's own payload fields.  The marker
+    gates replay, so it is written only after the data it marks."""
+    write_text_atomic(
+        _batch_marker(index_path, batch_id),
+        json.dumps({"batch_id": batch_id, **fields}),
+    )
 
 
 def ensure_index_params(
@@ -82,10 +124,8 @@ def ensure_index_params(
     no single-threshold run.  Builders therefore call this with
     ``overwrite=True`` (a rebuild legitimately re-defines the contract,
     exactly as it overwrites the index itself); probe/append paths and the
-    streaming wrappers validate-or-freeze.  Sidecar writes are tmp +
-    rename (the manifest pattern)."""
-    import json
-
+    streaming wrappers validate-or-freeze.  The sidecar is written by
+    :func:`write_text_atomic`."""
     pfile = index_path.rstrip("/") + ".params.json"
     if not overwrite and os.path.exists(pfile):
         with open(pfile) as f:
@@ -97,10 +137,7 @@ def ensure_index_params(
                 "parameters or rebuild at a fresh index path"
             )
         return
-    tmp = pfile + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(params, f, sort_keys=True)
-    os.replace(tmp, pfile)
+    write_text_atomic(pfile, json.dumps(params, sort_keys=True))
 
 
 def _data_files(path: str) -> list[str]:
@@ -177,20 +214,15 @@ def compact_index(
     if "batch_id" in df.columns and "batch_id" != partition_col:
         # stream-maintained layout: batch_id is the leading hive level
         if collapse_batches:
-            manifest_dir = base + ".batches"
             on_disk = sorted(
                 int(r["batch_id"])
                 for r in df.select("batch_id").distinct().collect()
             )
-            uncommitted = [
-                b
-                for b in on_disk
-                if not os.path.exists(os.path.join(manifest_dir, f"{b}.json"))
-            ]
+            uncommitted = [b for b in on_disk if not batch_committed(base, b)]
             if uncommitted:
                 raise RuntimeError(
                     f"collapse_batches: batches {uncommitted} have index "
-                    f"data but no commit manifest in {manifest_dir} — a "
+                    f"data but no commit manifest in {base}.batches — a "
                     "crashed write may be re-delivered on stream resume "
                     "and would duplicate its collapsed rows; resume the "
                     "stream to completion (or remove the orphan slice) "

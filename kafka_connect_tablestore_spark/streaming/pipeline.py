@@ -19,36 +19,22 @@ import json
 import os
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kafka_connect_tablestore_spark.engine import CdcEngine
 
-
-def _manifest_io(manifest_dir: str):
-    """The sidecar batch-manifest protocol, defined ONCE for every stream:
-    ``committed(batch_id)`` tests for ``<dir>/<batch_id>.json``;
-    ``commit(batch_id, **fields)`` writes it atomically (tmp + rename,
-    the LakeTable pattern) with ``batch_id`` plus the stream's own
-    payload fields.  A protocol change (fsync policy, marker layout)
-    lands here once instead of once per stream."""
-
-    def committed(batch_id: int) -> bool:
-        return os.path.exists(os.path.join(manifest_dir, f"{batch_id}.json"))
-
-    def commit(batch_id: int, **fields) -> None:
-        os.makedirs(manifest_dir, exist_ok=True)
-        final = os.path.join(manifest_dir, f"{batch_id}.json")
-        tmp = final + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, **fields}, f)
-            f.flush()
-            os.fsync(f.fileno())  # the marker gates replay: it must not
-            # survive LESS durably than the data it marks (power loss
-            # dropping a Bloom staged marker after the index append
-            # persisted would false-flag the whole replayed batch)
-        os.replace(tmp, final)
-
-    return committed, commit
+# the sidecar protocol (batch markers, the params guard, the fsync'd atomic
+# writer) lives with the index API itself: the batch build/probe/append
+# functions and compact_index use it too — the hazards it closes are not
+# streaming-specific.  The streams validate-or-freeze their params before
+# touching any per-batch state.
+from kafka_connect_tablestore_spark.operators.index_maint import (
+    batch_committed,
+    commit_batch,
+    ensure_index_params as _ensure_index_params,
+    write_text_atomic,
+)
 
 
 def _start_query(
@@ -79,13 +65,53 @@ def _start_query(
     return writer.start()
 
 
-# the params sidecar guard lives on the index API itself (the batch
-# build/probe/append functions call it too — the hazard it closes is not
-# streaming-specific); the streams validate-or-freeze before touching
-# any per-batch state
-from kafka_connect_tablestore_spark.operators.index_maint import (  # noqa: E402
-    ensure_index_params as _ensure_index_params,
-)
+def _index_stream_apply(index_path: str, cols: tuple, empty: dict, step):
+    """Build an index stream's ``foreachBatch`` body — the per-batch
+    skeleton every index stream shares:
+
+    1. a batch whose ``<index>.batches/<batch_id>.json`` marker exists is
+       a checkpoint replay of committed work: skip it;
+    2. materialize the batch's ``cols`` once (eager local checkpoint) and
+       count them;
+    3. an empty batch commits the ``empty`` marker fields;
+    4. otherwise ``step(frame, n_rows, batch_id)`` does the stream's own
+       work (params guard, bootstrap or incremental probe, slice write,
+       index append) and returns the marker fields, committed only after
+       it returns — the marker never becomes durable before the data it
+       marks."""
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_committed(index_path, batch_id):
+            return
+        frame = batch_df.select(*cols).localCheckpoint(eager=True)
+        n_rows = frame.count()
+        fields = step(frame, n_rows, batch_id) if n_rows else empty
+        commit_batch(index_path, batch_id, **fields)
+
+    return _apply
+
+
+def _first_by_id(vecs: DataFrame, id_col: str, vec_col: str, n: int) -> list:
+    """The deterministic 'first' training rule: the first ``n`` vectors by
+    id, collected as plain float lists (the JSON sidecar format)."""
+    return [
+        [float(x) for x in r[vec_col]]
+        for r in vecs.orderBy(id_col).limit(n).collect()
+    ]
+
+
+def _overwrite_cells(rows: DataFrame, batch_id: int, index_path: str) -> None:
+    """Land one batch's IVF-family rows as a dynamic partition overwrite of
+    its own ``batch_id=N/cell=C`` slice: a replayed batch rewrites, never
+    duplicates, its rows."""
+    (
+        rows.withColumn("batch_id", F.lit(batch_id))
+        .repartition("cell")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id", "cell")
+        .parquet(index_path)
+    )
 
 
 def start_cdc_stream(
@@ -200,8 +226,6 @@ def start_lsh_index_stream(
     band-partitioned index scan — the corpus text is never re-read, and the
     per-batch work is independent of corpus size except for the signature
     scan (bands × ~80 bytes/doc)."""
-    import os
-
     from kafka_connect_tablestore_spark.operators.dedup import (
         append_to_lsh_index,
         build_lsh_index,
@@ -209,18 +233,7 @@ def start_lsh_index_stream(
         minhash_lsh_pairs,
     )
 
-    manifest_dir = index_path.rstrip("/") + ".batches"
-
-    _committed, _commit = _manifest_io(manifest_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        docs = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
-        n_docs = docs.count()
-        if n_docs == 0:
-            _commit(batch_id, n_docs=0, n_pairs=0)
-            return
+    def _step(docs: DataFrame, n_docs: int, batch_id: int) -> dict:
         spark = docs.sparkSession
         _ensure_index_params(
             index_path, {"n_hashes": n_hashes, "bands": bands}
@@ -242,8 +255,11 @@ def start_lsh_index_stream(
         else:
             build_lsh_index(docs, index_path, text_col, id_col,
                             n_hashes, bands)
-        _commit(batch_id, n_docs=n_docs, n_pairs=n_pairs)
+        return {"n_docs": n_docs, "n_pairs": n_pairs}
 
+    _apply = _index_stream_apply(
+        index_path, (id_col, text_col), {"n_docs": 0, "n_pairs": 0}, _step
+    )
     return _start_query(
         docs_stream, _apply, checkpoint_dir, query_name, available_now, processing_time
     )
@@ -265,7 +281,7 @@ def start_chunk_index_stream(
 ) -> StreamingQuery:
     """Maintain the persisted chunk-fingerprint index from a document
     stream — the streaming twin of the multi-day ``incremental_chunk_dedup``
-    loop, completing the set with the LSH and semantic index streams.
+    loop.
 
     Per micro-batch: dedupe the batch's chunks against the index (plus
     within-batch first occurrences), write the per-doc result to
@@ -283,8 +299,6 @@ def start_chunk_index_stream(
     PRECONDITION inherited from the batch operator: ids
     must arrive in monotone order across batches (the natural append-only
     ingest shape) for exact equality with the full-corpus recompute."""
-    import os
-
     from kafka_connect_tablestore_spark.operators.corpus import (
         append_to_chunk_index,
         build_chunk_index,
@@ -292,18 +306,7 @@ def start_chunk_index_stream(
         incremental_chunk_dedup,
     )
 
-    manifest_dir = index_path.rstrip("/") + ".batches"
-
-    _committed, _commit = _manifest_io(manifest_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        docs = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
-        n_docs = docs.count()
-        if n_docs == 0:
-            _commit(batch_id, n_docs=0)
-            return
+    def _step(docs: DataFrame, n_docs: int, batch_id: int) -> dict:
         spark = docs.sparkSession
         _ensure_index_params(
             index_path, {"chunk_words": chunk_words, "n_buckets": n_buckets}
@@ -327,8 +330,11 @@ def start_chunk_index_stream(
             ).parquet(slice_dir)
             build_chunk_index(docs, index_path, text_col, id_col,
                               chunk_words, n_buckets)
-        _commit(batch_id, n_docs=n_docs)
+        return {"n_docs": n_docs}
 
+    _apply = _index_stream_apply(
+        index_path, (id_col, text_col), {"n_docs": 0}, _step
+    )
     return _start_query(
         docs_stream, _apply, checkpoint_dir, query_name, available_now, processing_time
     )
@@ -349,8 +355,7 @@ def start_fingerprint_index_stream(
 ) -> StreamingQuery:
     """Maintain the persisted exact-dedup fingerprint index from a document
     stream — the streaming twin of the multi-day ``incremental_dedup_exact``
-    loop, completing the stream-driven set (LSH, chunk, semantic, view,
-    and now the exact-fingerprint index: the FIRST gate a daily crawl
+    loop (the exact-fingerprint index is the FIRST gate a daily crawl
     ingest hits).
 
     Per micro-batch: dedup the batch against the index plus within-batch
@@ -368,10 +373,7 @@ def start_fingerprint_index_stream(
     PRECONDITION inherited from the batch operator: monotone ids across
     batches (the natural append-only ingest shape) for exact equality
     with ``dedup_exact`` on the full corpus."""
-    import os
-
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from kafka_connect_tablestore_spark.functions.text import doc_fingerprint
     from kafka_connect_tablestore_spark.operators.dedup import (
@@ -380,18 +382,7 @@ def start_fingerprint_index_stream(
         incremental_dedup_exact,
     )
 
-    manifest_dir = index_path.rstrip("/") + ".batches"
-
-    _committed, _commit = _manifest_io(manifest_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        docs = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
-        n_docs = docs.count()
-        if n_docs == 0:
-            _commit(batch_id, n_docs=0, n_kept=0)
-            return
+    def _step(docs: DataFrame, n_docs: int, batch_id: int) -> dict:
         spark = docs.sparkSession
         _ensure_index_params(index_path, {"n_buckets": n_buckets})
         slice_dir = os.path.join(verdicts_path, f"batch_id={batch_id}")
@@ -417,8 +408,11 @@ def start_fingerprint_index_stream(
             verdicts.write.mode("overwrite").parquet(slice_dir)
             build_fingerprint_index(docs, index_path, text_col, id_col, n_buckets)
             n_kept = verdicts.where("kept").count()
-        _commit(batch_id, n_docs=n_docs, n_kept=n_kept)
+        return {"n_docs": n_docs, "n_kept": n_kept}
 
+    _apply = _index_stream_apply(
+        index_path, (id_col, text_col), {"n_docs": 0, "n_kept": 0}, _step
+    )
     return _start_query(
         docs_stream, _apply, checkpoint_dir, query_name, available_now, processing_time
     )
@@ -439,8 +433,7 @@ def start_semantic_index_stream(
     query_name: str = "semantic-index-ingest",
 ) -> StreamingQuery:
     """Maintain the persisted SemDeDup survivor index from an embedding
-    stream — the second incremental index driven end-to-end under the
-    streaming engine (the LSH index above was the first).
+    stream, driven end-to-end under the streaming engine.
 
     Per micro-batch, in order:
 
@@ -500,9 +493,6 @@ def _make_semantic_apply(
     vectors to train ``n_cells`` centroids) must NOT leave a params sidecar
     behind — see ``start_semantic_index_stream``'s docstring for the full
     protocol."""
-    import json
-    import os
-
     from kafka_connect_tablestore_spark.operators.similarity import (
         append_to_semantic_index,
         build_semantic_index,
@@ -510,25 +500,9 @@ def _make_semantic_apply(
         semantic_dedup,
     )
 
-    manifest_dir = index_path.rstrip("/") + ".batches"
     centroids_file = index_path.rstrip("/") + ".centroids.json"
 
-    _committed, _commit = _manifest_io(manifest_dir)
-
-    def _save_centroids(centroids) -> None:
-        tmp = centroids_file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(centroids, f)
-        os.replace(tmp, centroids_file)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        vecs = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
-        n_vecs = vecs.count()
-        if n_vecs == 0:
-            _commit(batch_id, n_vecs=0, n_survivors=0)
-            return
+    def _step(vecs: DataFrame, n_vecs: int, batch_id: int) -> dict:
         spark = vecs.sparkSession
         slice_dir = os.path.join(verdicts_path, f"batch_id={batch_id}")
         if os.path.exists(centroids_file):
@@ -570,11 +544,13 @@ def _make_semantic_apply(
                 vecs, index_path, threshold, n_cells,
                 id_col=id_col, vec_col=vec_col, train="first",
             )
-            _save_centroids(centroids)
+            write_text_atomic(centroids_file, json.dumps(centroids))
             n_surv = spark.read.parquet(slice_dir).where("is_survivor").count()
-        _commit(batch_id, n_vecs=n_vecs, n_survivors=n_surv)
+        return {"n_vecs": n_vecs, "n_survivors": n_surv}
 
-    return _apply
+    return _index_stream_apply(
+        index_path, (id_col, vec_col), {"n_vecs": 0, "n_survivors": 0}, _step
+    )
 
 
 def start_view_maintenance_stream(
@@ -613,20 +589,12 @@ def start_view_maintenance_stream(
     version V — the equality the batch tests prove and this stream carries
     across micro-batches.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     from kafka_connect_tablestore_spark.operators.changefeed import (
         maintain_aggregate,
     )
 
-    manifest_dir = view_path.rstrip("/") + ".batches"
-
     def _view_dir(version: int) -> str:
         return os.path.join(view_path, f"v{version:06d}")
-
-    _committed, _commit = _manifest_io(manifest_dir)
 
     def _aggregate(state: DataFrame) -> DataFrame:
         return state.groupBy(*group_cols).agg(
@@ -637,7 +605,7 @@ def start_view_maintenance_stream(
         )
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
+        if batch_committed(view_path, batch_id):
             return
         spark = batch_df.sparkSession
         manifest = engine.apply_batch(batch_df, f"{query_name}-{batch_id}")
@@ -694,7 +662,7 @@ def start_view_maintenance_stream(
         out_dir = _view_dir(v_after)
         view.write.mode("overwrite").parquet(out_dir)
         n_groups = spark.read.parquet(out_dir).count()
-        _commit(batch_id, version=v_after, n_groups=n_groups)
+        commit_batch(view_path, batch_id, version=v_after, n_groups=n_groups)
 
     return _start_query(
         events_stream, _apply, checkpoint_dir, query_name, available_now, processing_time
@@ -715,10 +683,6 @@ def _make_bloom_apply(
     crash-replay protocol is directly testable: tests drive batches through
     it, delete a manifest to simulate a crash inside the append→commit
     window, and assert the replay's verdicts are untouched."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from kafka_connect_tablestore_spark.functions.text import doc_fingerprint
     from kafka_connect_tablestore_spark.operators.dedup import (
         _bloom_meta,
@@ -727,10 +691,6 @@ def _make_bloom_apply(
         build_bloom_index,
         incremental_bloom_dedup,
     )
-
-    manifest_dir = index_path.rstrip("/") + ".batches"
-
-    _committed, _commit = _manifest_io(manifest_dir)
 
     staged_dir = verdicts_path.rstrip("/") + ".staged"
 
@@ -747,25 +707,14 @@ def _make_bloom_apply(
         ) or os.path.exists(os.path.join(slice_dir, "_SUCCESS"))
 
     def _stage(batch_id: int) -> None:
-        os.makedirs(staged_dir, exist_ok=True)
-        final = os.path.join(staged_dir, f"{batch_id}.marker")
-        tmp = final + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-            f.flush()
-            os.fsync(f.fileno())  # the marker disarms the re-probe on
-            # replay: it must never be LESS durable than the index append
-            # it authorizes
-        os.replace(tmp, final)
+        # the marker disarms the re-probe on replay: it must never be LESS
+        # durable than the index append it authorizes (write_text_atomic
+        # fsyncs before the rename)
+        write_text_atomic(
+            os.path.join(staged_dir, f"{batch_id}.marker"), str(batch_id)
+        )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        docs = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
-        n_docs = docs.count()
-        if n_docs == 0:
-            _commit(batch_id, n_docs=0, n_flagged=0)
-            return
+    def _step(docs: DataFrame, n_docs: int, batch_id: int) -> dict:
         spark = docs.sparkSession
         slice_dir = os.path.join(verdicts_path, f"batch_id={batch_id}")
         meta_exists = os.path.exists(index_path.rstrip("/") + ".meta")
@@ -811,9 +760,11 @@ def _make_bloom_apply(
             _stage(batch_id)
             build_bloom_index(docs, index_path, m_bits, k, text_col)
             n_flagged = 0
-        _commit(batch_id, n_docs=n_docs, n_flagged=n_flagged)
+        return {"n_docs": n_docs, "n_flagged": n_flagged}
 
-    return _apply
+    return _index_stream_apply(
+        index_path, (id_col, text_col), {"n_docs": 0, "n_flagged": 0}, _step
+    )
 
 
 def start_bloom_index_stream(
@@ -831,8 +782,8 @@ def start_bloom_index_stream(
     query_name: str = "bloom-index-ingest",
 ) -> StreamingQuery:
     """Maintain the persisted Bloom bitset index from a document stream —
-    the streaming twin of the ``incremental_bloom_dedup`` loop (seventh
-    index, sixth stream-driven).  Per micro-batch: probe the index
+    the streaming twin of the ``incremental_bloom_dedup`` loop.  Per
+    micro-batch: probe the index
     (first batch: everything is definitely-new), write per-doc
     ``(id, fp, maybe_in_prior)`` verdicts to ``verdicts_path/batch_id=N``
     with ``overwrite``, append the batch's bitset rows, commit the batch
@@ -875,10 +826,9 @@ def start_ivf_index_stream(
     processing_time: str | None = None,
     query_name: str = "ivf-index-ingest",
 ) -> StreamingQuery:
-    """Maintain the persisted IVF inverted file from an embedding stream —
-    the seventh stream-driven index (LSH, chunk, fingerprint, semantic,
-    view, Bloom, then this; :func:`start_ivfpq_index_stream` adds the
-    PQ-coded variant on the same coarse layer).
+    """Maintain the persisted IVF inverted file from an embedding stream
+    (:func:`start_ivfpq_index_stream` adds the PQ-coded variant on the
+    same coarse layer).
 
     Batch 0 trains the centroids with the same deterministic 'first' rule
     as ``build_ivf_index(train='first')`` (the first ``n_cells`` vectors by
@@ -900,29 +850,14 @@ def start_ivf_index_stream(
     ``ann_ivf_indexed_topk``'s probed-cell filter still prunes to the
     probed directories.
     """
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
     from kafka_connect_tablestore_spark.operators.similarity import (
         _norm,
         ivf_assign,
     )
 
-    manifest_dir = index_path.rstrip("/") + ".batches"
     centroids_file = index_path.rstrip("/") + ".centroids.json"
 
-    _committed, _commit = _manifest_io(manifest_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        vecs = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
-        n_vecs = vecs.count()
-        if n_vecs == 0:
-            _commit(batch_id, n_vecs=0)
-            return
+    def _step(vecs: DataFrame, n_vecs: int, batch_id: int) -> dict:
         if os.path.exists(centroids_file):
             with open(centroids_file) as f:
                 centroids = json.load(f)
@@ -942,14 +877,8 @@ def start_ivf_index_stream(
                     f"{n_cells} vectors to train the coarse quantizer "
                     f"(got {n_vecs}); lower n_cells or enlarge batch 0"
                 )
-            centroids = [
-                [float(x) for x in r[vec_col]]
-                for r in vecs.orderBy(id_col).limit(n_cells).collect()
-            ]
-            tmp = centroids_file + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(centroids, f)
-            os.replace(tmp, centroids_file)
+            centroids = _first_by_id(vecs, id_col, vec_col, n_cells)
+            write_text_atomic(centroids_file, json.dumps(centroids))
         d0 = len(vecs.select(vec_col).first()[0])
         if d0 != len(centroids[0]):
             # len-mismatched dot products zip_with-truncate silently,
@@ -961,22 +890,21 @@ def start_ivf_index_stream(
                 "changed; rebuild the index at a fresh path"
             )
         vd = F.col(vec_col).cast("array<double>")
-        (
+        _overwrite_cells(
             vecs.select(
                 F.col(id_col).alias("neighbor_id"),
                 vd.alias("cv"),
                 _norm(vd).alias("cn"),
                 ivf_assign(F.col(vec_col), centroids).alias("cell"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .repartition("cell")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "cell")
-            .parquet(index_path)
+            ),
+            batch_id,
+            index_path,
         )
-        _commit(batch_id, n_vecs=n_vecs)
+        return {"n_vecs": n_vecs}
 
+    _apply = _index_stream_apply(
+        index_path, (id_col, vec_col), {"n_vecs": 0}, _step
+    )
     return _start_query(
         vecs_stream, _apply, checkpoint_dir, query_name, available_now, processing_time
     )
@@ -999,7 +927,7 @@ def start_ivfpq_index_stream(
     query_name: str = "ivfpq-index-ingest",
 ) -> StreamingQuery:
     """Maintain the persisted IVFADC (IVF-PQ) index from an embedding
-    stream — the eighth stream-driven index and the production ANN shape:
+    stream — the production ANN shape:
     batch 0 trains BOTH quantizer levels with the deterministic 'first'
     rules (coarse centroids = first ``n_cells`` vectors by id; PQ
     codebooks = first ``n_codes`` residuals by id, exactly what
@@ -1014,28 +942,13 @@ def start_ivfpq_index_stream(
     each batch lands as a dynamic partition overwrite of its own
     ``batch_id=N/cell=C`` slice; the manifest is a fast-skip only.
     Partition pruning on ``cell`` survives the extra level."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
     from kafka_connect_tablestore_spark.operators.similarity import (
         _ivfpq_corpus_plan,
     )
 
-    manifest_dir = index_path.rstrip("/") + ".batches"
     meta_file = index_path.rstrip("/") + ".meta.json"
 
-    _committed, _commit = _manifest_io(manifest_dir)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if _committed(batch_id):
-            return
-        vecs = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
-        n_vecs = vecs.count()
-        if n_vecs == 0:
-            _commit(batch_id, n_vecs=0)
-            return
+    def _step(vecs: DataFrame, n_vecs: int, batch_id: int) -> dict:
         if os.path.exists(meta_file):
             with open(meta_file) as f:
                 meta = json.load(f)
@@ -1065,10 +978,7 @@ def start_ivfpq_index_stream(
                     f"to train both quantizer levels (got {n_vecs}); lower "
                     "them or enlarge batch 0"
                 )
-            centroids = [
-                [float(x) for x in r[vec_col]]
-                for r in vecs.orderBy(id_col).limit(n_cells).collect()
-            ]
+            centroids = _first_by_id(vecs, id_col, vec_col, n_cells)
             codebooks = None  # batch 0 trains them inside the encode plan
         d0 = len(vecs.select(vec_col).first()[0])
         if d0 != dim or dim % m != 0:
@@ -1087,23 +997,17 @@ def start_ivfpq_index_stream(
             "first", encode, codebooks=codebooks,
         )
         if not os.path.exists(meta_file):
-            tmp = meta_file + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"centroids": centroids, "codebooks": codebooks,
-                     "encode": encode}, f,
-                )
-            os.replace(tmp, meta_file)
-        (
-            corpus.withColumn("batch_id", F.lit(batch_id))
-            .repartition("cell")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "cell")
-            .parquet(index_path)
-        )
-        _commit(batch_id, n_vecs=n_vecs)
+            write_text_atomic(
+                meta_file,
+                json.dumps({"centroids": centroids, "codebooks": codebooks,
+                            "encode": encode}),
+            )
+        _overwrite_cells(corpus, batch_id, index_path)
+        return {"n_vecs": n_vecs}
 
+    _apply = _index_stream_apply(
+        index_path, (id_col, vec_col), {"n_vecs": 0}, _step
+    )
     return _start_query(
         vecs_stream, _apply, checkpoint_dir, query_name, available_now, processing_time
     )
